@@ -18,26 +18,29 @@ Perf posture (rounds 4-5, vectorized): PNG unfilter batches runs of
 None/Sub/Up rows through 2D uint8-wraparound cumsums (Sub is a per-channel
 prefix sum along the row; a run of Up rows is a prefix sum down the rows)
 and decodes the sequential Average/Paeth rows with tight Python-list loops
-(~10× faster than numpy scalar indexing). JPEG entropy decode uses a
-sliding-window bit reader with a cached 16-bit-lookahead huffman LUT (one
-list index per symbol instead of one dict probe per *bit*), and all
-dequantize/IDCT/plane-scatter math is batched across every block of a
-component in single numpy matmul/transpose calls. Measured vs the round-3
-scalar decoders (tests/test_codecs.py microbench, byte-identical outputs):
-PNG ~10-13×, JPEG ~4× (the entropy loop is at the CPython per-coefficient
-floor, ~0.7µs/coeff), combined payload mix ~5.5×.
+(~10× faster than numpy scalar indexing). JPEG entropy decode moves a
+plain-int bit cursor over a numpy-built table of every 16-bit stream
+window and indexes a cached 16-bit-lookahead huffman LUT with it (one
+list index per symbol instead of one dict probe per *bit*, and no window
+refill/shift/mask per symbol), and all dequantize/IDCT/plane-scatter
+math is batched across every block of a component in single numpy
+matmul/transpose calls. Measured vs the round-3 scalar decoders
+(tests/test_codecs.py microbench, byte-identical outputs, 4-vCPU VM):
+PNG ~10-13×, JPEG ~5× (the entropy loop is at the CPython
+per-coefficient floor), combined payload mix ~7×.
 
 Round 5 extended the treatment to the round-4 paths: progressive JPEG
-scans run on inlined bit windows with combined AC-first and AC-refinement
-LUTs (sign/EOBn bits folded into the probe), DC-refinement scans decode
-wholesale via np.unpackbits, coefficients accumulate in numpy via
-batched scatters, and whole EOB-run tails are extracted with one
-unpackbits slice; GIF LZW decodes cycle-at-a-time (numpy batch code
+scans share the baseline's bit cursor and use combined AC-first and
+AC-refinement LUTs (sign/EOBn bits folded into the probe), DC-refinement
+scans decode wholesale via np.unpackbits, coefficients accumulate in
+numpy via batched scatters, and AC-refinement correction bits are
+recorded as (offset, count) runs and gathered in one numpy pass per
+scan; GIF LZW decodes cycle-at-a-time (numpy batch code
 extraction, prefix-link dictionary arrays resolved by pointer doubling,
 transpose pointer-chase emission, scalar fallback for long-chain
 repetitive cycles). Measured vs the round-4 decoders (same microbench,
 byte-identical): GIF LZW ~3.4-3.7× on photo-like frames, progressive
-~1.3-1.5× full-decode — round 4's progressive already decoded symbols
+~1.4-1.6× full-decode — round 4's progressive already decoded symbols
 through the 16-bit LUT, so its AC loops were (and remain) at the same
 per-coefficient CPython floor as baseline. Still well off a native
 codec — if a binary wheel (PIL) ever lands in the image, swap it in
@@ -52,6 +55,7 @@ import re
 import struct
 import wave
 import zlib
+from bisect import bisect_left
 
 import numpy as np
 
@@ -349,12 +353,6 @@ def _build_huff_decoder(bits: tuple[int, ...], huffval: tuple[int, ...]) -> list
 
 _HUFF_LUT_CACHE: dict[tuple, list[int]] = {}
 
-# window &= _MASKS[wbits] — one list index instead of shift+sub per consume
-# (160 entries: progressive AC refinement batches up to 63 correction bits
-# on top of a 48-bit refill, so the window can briefly exceed 96 bits)
-_MASKS = [(1 << i) - 1 for i in range(160)]
-
-
 def _build_ac_lut2(bits: list[int], huffval: list[int]) -> list[int]:
     """Combined AC LUT (libjpeg-turbo style fast path): index = next 16
     bits, value packs the *fully decoded coefficient* when code+magnitude
@@ -524,6 +522,38 @@ class _BitReader:
         return v >> 5
 
 
+def _peek16_table(segments: list[bytes]) -> tuple[memoryview, list[tuple[int, int]]]:
+    """Every 16-bit MSB-first window of the entropy data, one per bit
+    position: ``table[bp]`` is the huffman LUT index at bit cursor ``bp``.
+    Segments are laid out back to back with two zero bytes after each,
+    so a window that runs past a segment's end sees zero fill — the
+    peek semantics of the sliding-window reader. Returns the table and
+    each segment's (start, end) bit offsets. A uint16 memoryview costs
+    16 bytes per input byte and indexes to a plain int."""
+    bounds = []
+    off = 0
+    for s in segments:
+        bounds.append((off, off + 8 * len(s)))
+        off += 8 * (len(s) + 2)
+    b = np.frombuffer(b"\0\0".join(segments) + b"\0\0\0", np.uint8).astype(np.uint32)
+    w24 = (b[:-2] << 16) | (b[1:-1] << 8) | b[2:]
+    pk = np.empty((len(w24), 8), np.uint16)
+    for r in range(8):
+        pk[:, r] = w24 >> (8 - r)  # the uint16 store keeps the low 16 bits
+    return memoryview(pk.reshape(-1)), bounds
+
+
+def _peek_bits(peek: memoryview, bp: int, n: int) -> int:
+    """``n`` stream bits at cursor ``bp`` (MSB first) for n > 16 — a DC
+    magnitude size only a corrupt table can produce."""
+    v = 0
+    while n > 16:
+        v = (v << 16) | peek[bp]
+        bp += 16
+        n -= 16
+    return (v << n) | (peek[bp] >> (16 - n))
+
+
 def _extend(v: int, size: int) -> int:
     """T.81 F.2.2.1 sign extension of a SIZE-bit magnitude."""
     if size == 0:
@@ -636,7 +666,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     # Entropy decode collects (flat_index, value) pairs per component;
     # ALL coefficient scatter, dequant, IDCT and plane-scatter math is
     # batched afterwards in a handful of whole-array numpy calls instead
-    # of one 8×8 matmul per block. The bit-window state lives in plain
+    # of one 8×8 matmul per block. The bit-cursor state lives in plain
     # locals (not a reader object): attribute access + method-call
     # overhead was the round-4 profile's top cost, worth ~2.5× here.
     # Per-MCU block layout: for each comp, vi*hi blocks; huffman decode via
@@ -650,51 +680,38 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         comp_meta.append((cid, vi * hi, huff_dc[td], huff_ac[ta], packed.append, packed))
     preds = [0] * len(comps)
     blk_base = [0] * len(comps)  # running flat offset (bi * 64) per comp
+    # The bit cursor ``bp`` is a plain int into a precomputed 16-bit peek
+    # table (see _peek16_table): no window refill, shift or mask per symbol.
+    # ``nbits - bp`` is the bits left in the current restart segment.
+    peek, seg_bits = _peek16_table(segments)
     seg_idx = 0
-    seg = segments[0]
-    seg_n = len(seg)
-    spos = 0
-    window = 0
-    wbits = 0
+    bp, nbits = seg_bits[0]
     for mcu in range(n_mcus):
         if restart_interval and mcu and mcu % restart_interval == 0:
             seg_idx += 1
-            seg = segments[seg_idx]
-            seg_n = len(seg)
-            spos = 0
-            window = 0
-            wbits = 0
+            bp, nbits = seg_bits[seg_idx]
             preds = [0] * len(comps)
         for ci, (_cid, nblk, dc_lut, ac2, app, _packed) in enumerate(comp_meta):
             for _blk in range(nblk):
                 base = blk_base[ci] << 12
+                last = base + (63 << 12)
                 blk_base[ci] += 64
                 # --- DC: size symbol + magnitude (two-step; 1 per block) ---
-                if wbits < 27:  # refill 6 bytes at once (max code+mag = 27)
-                    chunk = seg[spos : spos + 6]
-                    if chunk:
-                        nb8 = len(chunk) << 3
-                        spos += 6
-                        window = (window << nb8) | int.from_bytes(chunk, "big")
-                        wbits += nb8
-                peek = (
-                    window >> (wbits - 16) if wbits >= 16 else (window << (16 - wbits)) & 0xFFFF
-                )
-                v = dc_lut[peek]
+                v = dc_lut[peek[bp]]
                 size = v & 31
-                if size == 0 or size > wbits:
+                if size == 0 or bp + size > nbits:
                     raise ValueError(
-                        "JPEG entropy data truncated" if wbits < 16 else "invalid JPEG huffman code"
+                        "JPEG entropy data truncated"
+                        if nbits - bp < 16
+                        else "invalid JPEG huffman code"
                     )
+                bp += size
                 s = v >> 5
-                wbits -= size
-                window &= _MASKS[wbits]
                 if s:
-                    if s > wbits:
+                    if bp + s > nbits:
                         raise ValueError("JPEG entropy data truncated")
-                    wbits -= s
-                    mag = window >> wbits
-                    window &= _MASKS[wbits]
+                    mag = peek[bp] >> (16 - s) if s <= 16 else _peek_bits(peek, bp, s)
+                    bp += s
                     if mag < 1 << (s - 1):
                         mag += 1 - (1 << s)
                     preds[ci] += mag
@@ -708,62 +725,49 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     raise ValueError("JPEG DC predictor out of range")
                 app(base | ((preds[ci] + 2048) & 4095))
                 # --- AC: one combined-LUT hit per coefficient ---
-                k = 1
-                while k < 64:
-                    if wbits < 26:
-                        chunk = seg[spos : spos + 6]
-                        if chunk:
-                            nb8 = len(chunk) << 3
-                            spos += 6
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                    peek = (
-                        window >> (wbits - 16)
-                        if wbits >= 16
-                        else (window << (16 - wbits)) & 0xFFFF
-                    )
-                    v = ac2[peek]
-                    tl = v & 31
-                    if tl == 0 or tl > wbits:
-                        if tl == 0 and wbits >= 16:
-                            raise ValueError("invalid JPEG huffman code")
+                # ``at`` is the packed flat position (bi * 64 + k) << 12 of
+                # coefficient k, so a decoded value appends as ``at + vf``
+                # and a zero run of r advances it by r << 12
+                # ((v & 2016) << 7 == ((v >> 5) & 63) << 12).
+                at = base + 4096
+                while at <= last:
+                    v = ac2[peek[bp]]
+                    bp += v & 31
+                    if bp > nbits:
                         raise ValueError("JPEG entropy data truncated")
-                    wbits -= tl
-                    window &= _MASKS[wbits]
                     vf = (v >> 11) & 4095
                     if vf:
                         if vf != 2048:  # fast path: value fully decoded
-                            k += (v >> 5) & 63
-                            if k > 63:
+                            at += (v & 2016) << 7
+                            if at > last:
                                 raise ValueError("JPEG AC run overflow")
-                            app(base + (k << 12) + vf)
-                            k += 1
+                            app(at + vf)
+                            at += 4096
                             continue
-                        if (v >> 5) & 63 == 15:  # ZRL
-                            k += 16
+                        if v & 2016 == 480:  # ZRL (run 15)
+                            at += 65536
                             continue
                         break  # EOB (and undefined run|0 symbols, per T.81)
-                    # slow path: code consumed, read the magnitude bits
+                    # slow path: code consumed, read the magnitude bits; an
+                    # invalid prefix (entry 0, length 0) lands here too
+                    if not v & 31:
+                        raise ValueError(
+                            "JPEG entropy data truncated"
+                            if nbits - bp < 16
+                            else "invalid JPEG huffman code"
+                        )
                     s = (v >> 23) & 15
-                    if wbits < 16:
-                        chunk = seg[spos : spos + 6]
-                        if chunk:
-                            nb8 = len(chunk) << 3
-                            spos += 6
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                    if s > wbits:
+                    if bp + s > nbits:
                         raise ValueError("JPEG entropy data truncated")
-                    wbits -= s
-                    mag = window >> wbits
-                    window &= _MASKS[wbits]
+                    mag = peek[bp] >> (16 - s)
+                    bp += s
                     if mag < 1 << (s - 1):
                         mag += 1 - (1 << s)
-                    k += (v >> 5) & 63
-                    if k > 63:
+                    at += (v & 2016) << 7
+                    if at > last:
                         raise ValueError("JPEG AC run overflow")
-                    app(base + (k << 12) + (mag + 2048))
-                    k += 1
+                    app(at + mag + 2048)
+                    at += 4096
     zz_of = {}
     for (cid, hi, vi, _tq), (_c, _nb, _d, _a, _app, packed) in zip(comps, comp_meta):
         nb = n_mcus * vi * hi
@@ -860,12 +864,13 @@ def _decode_progressive(data: bytes) -> np.ndarray:
     and EOB-run coding. Coefficients accumulate across scans in zigzag
     order; reconstruction shares the baseline tail (_assemble_image).
 
-    Perf posture (round 5): the scan loops use the same inlined
-    bit-window + 16-bit-lookahead LUT treatment as the baseline decoder
+    Perf posture (round 5): the scan loops use the same peek-table bit
+    cursor + 16-bit-lookahead LUT treatment as the baseline decoder
     — AC-first scans ride the combined value LUT (_build_ac_lut2), DC
-    and AC-refinement symbols the two-step LUT — and DC-refinement
-    scans, being raw one-bit-per-block streams, are decoded wholesale
-    with np.unpackbits. Byte-identical to the round-4 _BitReader loops
+    symbols the two-step LUT, AC-refinement symbols the combined
+    refinement LUT (_build_refine_lut) — and DC-refinement scans, being
+    raw one-bit-per-block streams, are decoded wholesale with
+    np.unpackbits. Byte-identical to the round-4 _BitReader loops
     (pinned with a copied-baseline microbench in tests/test_codecs.py).
     The residual floor is AC-refinement's per-coefficient CPython; the
     documented PIL swap-in seam applies here too.
@@ -988,11 +993,17 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                 coef[cid][bases[bit_arr == 1]] |= p1
             continue
 
+        # Every Huffman-coded scan below reads through a bit cursor ``bp``
+        # into a 16-bit peek table, as the baseline decoder does (see
+        # _peek16_table); ``nbits`` ends the current restart segment.
+        peek, seg_bits = _peek16_table(segments)
+        seg_idx = 0
+        bp, nbits = seg_bits[0]
+
         if ss == 0:
             # ---- DC first: one huffman size + magnitude per block -------
-            # Inlined bit window + two-step LUT (baseline treatment); the
-            # decoded predictors are appended per comp and applied as one
-            # scatter per scan.
+            # Two-step LUT (baseline treatment); the decoded predictors are
+            # appended per comp and applied as one scatter per scan.
             plan = []  # (ci, dc_lut, nb, vals_append)
             vals: list[list[int]] = []
             for ci, (cid, dc_spec, _ac) in enumerate(scomps):
@@ -1007,59 +1018,28 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                 hi, vi = by_cid[cid0]
                 n_units = len(_prog_noninter_bases(w, h, hi, vi, hmax, vmax, mcux))
             preds = [0] * len(scomps)
-            seg_idx = 0
-            seg = segments[0]
-            spos = 0
-            window = 0
-            wbits = 0
             for unit in range(n_units):
                 if ri and unit and unit % ri == 0:
                     seg_idx += 1
-                    seg = segments[seg_idx]
-                    spos = 0
-                    window = 0
-                    wbits = 0
+                    bp, nbits = seg_bits[seg_idx]
                     preds = [0] * len(scomps)
                 for ci, dc_lut, nb, vapp in plan:
                     for _blk in range(nb):
-                        if wbits < 27:  # refill 6 bytes (max code+mag = 27)
-                            chunk = seg[spos : spos + 6]
-                            if chunk:
-                                nb8 = len(chunk) << 3
-                                spos += 6
-                                window = (window << nb8) | int.from_bytes(chunk, "big")
-                                wbits += nb8
-                        peek = (
-                            window >> (wbits - 16)
-                            if wbits >= 16
-                            else (window << (16 - wbits)) & 0xFFFF
-                        )
-                        v = dc_lut[peek]
+                        v = dc_lut[peek[bp]]
                         ln = v & 31
-                        if ln == 0 or ln > wbits:
+                        if ln == 0 or bp + ln > nbits:
                             raise ValueError(
                                 "JPEG entropy data truncated"
-                                if wbits < 16
+                                if nbits - bp < 16
                                 else "invalid JPEG huffman code"
                             )
+                        bp += ln
                         s = v >> 5
-                        wbits -= ln
-                        window &= _MASKS[wbits]
                         if s:
-                            if s > wbits:
-                                chunk = seg[spos : spos + 6]
-                                if chunk:
-                                    nb8 = len(chunk) << 3
-                                    spos += 6
-                                    window = (window << nb8) | int.from_bytes(
-                                        chunk, "big"
-                                    )
-                                    wbits += nb8
-                                if s > wbits:
-                                    raise ValueError("JPEG entropy data truncated")
-                            wbits -= s
-                            mag = window >> wbits
-                            window &= _MASKS[wbits]
+                            if bp + s > nbits:
+                                raise ValueError("JPEG entropy data truncated")
+                            mag = peek[bp] >> (16 - s) if s <= 16 else _peek_bits(peek, bp, s)
+                            bp += s
                             if mag < 1 << (s - 1):
                                 mag += 1 - (1 << s)
                             preds[ci] += mag
@@ -1080,11 +1060,6 @@ def _decode_progressive(data: bytes) -> np.ndarray:
         hi, vi = by_cid[cid]
         bases1 = _prog_noninter_bases(w, h, hi, vi, hmax, vmax, mcux)
         cf = coef[cid]
-        seg_idx = 0
-        seg = segments[0]
-        spos = 0
-        window = 0
-        wbits = 0
         eobrun = 0
 
         if ah == 0:
@@ -1098,36 +1073,17 @@ def _decode_progressive(data: bytes) -> np.ndarray:
             for unit, base in enumerate(bases1):
                 if ri and unit and unit % ri == 0:
                     seg_idx += 1
-                    seg = segments[seg_idx]
-                    spos = 0
-                    window = 0
-                    wbits = 0
+                    bp, nbits = seg_bits[seg_idx]
                     eobrun = 0
                 if eobrun > 0:
                     eobrun -= 1
                     continue
                 k = ss
                 while k <= se:
-                    if wbits < 26:
-                        chunk = seg[spos : spos + 6]
-                        if chunk:
-                            nb8 = len(chunk) << 3
-                            spos += 6
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                    peek = (
-                        window >> (wbits - 16)
-                        if wbits >= 16
-                        else (window << (16 - wbits)) & 0xFFFF
-                    )
-                    v = ac2[peek]
-                    tl = v & 31
-                    if tl == 0 or tl > wbits:
-                        if tl == 0 and wbits >= 16:
-                            raise ValueError("invalid JPEG huffman code")
+                    v = ac2[peek[bp]]
+                    bp += v & 31
+                    if bp > nbits:
                         raise ValueError("JPEG entropy data truncated")
-                    wbits -= tl
-                    window &= _MASKS[wbits]
                     vf = (v >> 11) & 4095
                     if vf:
                         if vf != 2048:  # fast path: coefficient fully decoded
@@ -1144,41 +1100,30 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                         if r != 15:  # EOBn: 1 << r blocks (+ r extra bits)
                             eobrun = 1 << r
                             if r:
-                                if r > wbits:
-                                    chunk = seg[spos : spos + 6]
-                                    if chunk:
-                                        nb8 = len(chunk) << 3
-                                        spos += 6
-                                        window = (window << nb8) | int.from_bytes(
-                                            chunk, "big"
-                                        )
-                                        wbits += nb8
-                                    if r > wbits:
-                                        raise ValueError("JPEG entropy data truncated")
-                                wbits -= r
-                                eobrun += window >> wbits
-                                window &= _MASKS[wbits]
+                                if bp + r > nbits:
+                                    raise ValueError("JPEG entropy data truncated")
+                                eobrun += peek[bp] >> (16 - r)
+                                bp += r
                             eobrun -= 1  # counts this block
                             break
                         k += 16  # ZRL
                         continue
-                    # slow path: code consumed, read the magnitude bits
+                    # slow path: code consumed, read the magnitude bits; an
+                    # invalid prefix (entry 0, length 0) lands here too
+                    if not v & 31:
+                        raise ValueError(
+                            "JPEG entropy data truncated"
+                            if nbits - bp < 16
+                            else "invalid JPEG huffman code"
+                        )
                     s = (v >> 23) & 15
                     k += (v >> 5) & 63
                     if k > se:
                         raise ValueError("JPEG AC band overflow")
-                    if s > wbits:
-                        chunk = seg[spos : spos + 6]
-                        if chunk:
-                            nb8 = len(chunk) << 3
-                            spos += 6
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                        if s > wbits:
-                            raise ValueError("JPEG entropy data truncated")
-                    wbits -= s
-                    mag = window >> wbits
-                    window &= _MASKS[wbits]
+                    if bp + s > nbits:
+                        raise ValueError("JPEG entropy data truncated")
+                    mag = peek[bp] >> (16 - s)
+                    bp += s
                     if mag < 1 << (s - 1):
                         mag += 1 - (1 << s)
                     papp(((base + k) << 32) | ((mag << al) + 0x80000000))
@@ -1188,32 +1133,34 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                 cf[pk >> 32] = (pk & 0xFFFFFFFF) - 0x80000000
             continue
 
-        # ---- AC refinement (T.81 G.2.3): map-walk + batched bit reads ---
+        # ---- AC refinement (T.81 G.2.3): map-walk + deferred bit reads --
         # The refinement stream's bit schedule is fixed by the PRE-scan
         # coefficient state: one correction bit per already-nonzero band
         # position passed, and the zero-history positions are where new
         # coefficients can land. Both maps are precomputed with numpy, so
         # the loop never touches zero positions (the round-4 walk spent
-        # ~4 statements on every one of them) and correction bits are
-        # consumed in ONE batched window read per advance. Corrections and
-        # placements are collected and applied as scatters at scan end —
-        # sound because a position gets at most one write per scan and
-        # nothing in the scan reads post-write state: corrections never
-        # change nonzero-ness or sign (|c| >= 2*p1 pre-scan), placements
-        # land on consumed zero-history positions. (The round-4 walk's
-        # defensive ``not (c & p1)`` re-check is provably dead on any
-        # stream whose earlier scans used Al' > Al, which T.81 G.1.1.1.2
-        # requires — pre-scan values are even multiples of 2*p1.)
+        # ~4 statements on every one of them). A correction bit's value
+        # never steers the walk, only its count does, so each advance
+        # records one (bit offset, first nz index, count) run and skips
+        # the cursor past it; the bits are gathered from the peek table
+        # with numpy at scan end. Corrections and placements are applied
+        # as scatters at scan end — sound because a position gets at most
+        # one write per scan and nothing in the scan reads post-write
+        # state: corrections never change nonzero-ness or sign (|c| >=
+        # 2*p1 pre-scan), placements land on consumed zero-history
+        # positions. (The round-4 walk's defensive ``not (c & p1)``
+        # re-check is provably dead on any stream whose earlier scans used
+        # Al' > Al, which T.81 G.1.1.1.2 requires — pre-scan values are
+        # even multiples of 2*p1.)
         rlut = _build_refine_lut(*ac_spec)
         bases_arr = np.array(bases1, np.int64)
         band = np.arange(ss, se + 1, dtype=np.int64)
         gathered = cf[bases_arr[:, None] + band[None, :]]
         nzmask = gathered != 0
         bsel, ksel = np.nonzero(nzmask)
-        nzpos_np = bases_arr[bsel] + ss + ksel
+        nzpos_np = bases_arr[bsel] + ss + ksel  # ascending within each block
         nzdelta_np = np.where(gathered[bsel, ksel] >= 0, p1, m1)
         nzpos_all = nzpos_np.tolist()
-        nzdelta_all = nzdelta_np.tolist()
         ncounts = np.count_nonzero(nzmask, axis=1)
         noffs = np.concatenate(([0], np.cumsum(ncounts))).tolist()
         zsel, zksel = np.nonzero(~nzmask)
@@ -1221,52 +1168,30 @@ def _decode_progressive(data: bytes) -> np.ndarray:
         zoffs = np.concatenate(
             ([0], np.cumsum((se + 1 - ss) - ncounts))
         ).tolist()
-        cpos: list[int] = []  # corrections: positions whose bit was 1
-        cdel: list[int] = []  # ...and their +-p1 delta (pre-scan sign)
+        runs: list[int] = []  # correction-bit runs, flat (bit, nz index, count)
+        rext = runs.extend
         packedr: list[int] = []  # placements, packed like AC first
-        capp, dapp, papp = cpos.append, cdel.append, packedr.append
-        cchunks: list[np.ndarray] = []  # bulk-tail correction scatters
-        dchunks: list[np.ndarray] = []
-        ub_cache: list = [None] * len(segments)
+        papp = packedr.append
         nblocks = len(bases1)
         b = 0
-        # Refills below use ``spos += len(chunk)`` so the absolute bit
-        # offset ``(spos << 3) - wbits`` stays exact — the bulk EOB-tail
-        # path below re-syncs the window from it.
         while b < nblocks:
             if ri and b and b % ri == 0:
                 seg_idx += 1
-                seg = segments[seg_idx]
-                spos = 0
-                window = 0
-                wbits = 0
+                bp, nbits = seg_bits[seg_idx]
                 eobrun = 0
             ni, nend = noffs[b], noffs[b + 1]
             zi, zend = zoffs[b], zoffs[b + 1]
             if eobrun == 0:
                 while ni < nend or zi < zend:
-                    if wbits < 16:
-                        chunk = seg[spos : spos + 6]
-                        if chunk:
-                            nb8 = len(chunk) << 3
-                            spos += len(chunk)
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                    peek = (
-                        window >> (wbits - 16)
-                        if wbits >= 16
-                        else (window << (16 - wbits)) & 0xFFFF
-                    )
-                    v = rlut[peek]
+                    v = rlut[peek[bp]]
                     tl = v & 31
-                    if tl == 0 or tl > wbits:
+                    if tl == 0 or bp + tl > nbits:
                         raise ValueError(
                             "JPEG entropy data truncated"
-                            if wbits < 16
+                            if nbits - bp < 16
                             else "invalid JPEG huffman code"
                         )
-                    wbits -= tl
-                    window &= _MASKS[wbits]
+                    bp += tl
                     vk = v & 1536  # kind bits 9-10
                     if vk == 0:  # new coefficient, sign folded at bit 11
                         r = (v >> 5) & 15
@@ -1278,32 +1203,16 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                         if zi + 15 < zend:
                             boundary = zpos_all[zi + 15]
                             zi += 16
-                            j = ni
-                            while j < nend and nzpos_all[j] < boundary:
-                                j += 1
+                            j = bisect_left(nzpos_all, boundary, ni, nend)
                         else:  # fewer than 16 zeros left: pass everything
                             boundary = None
                             j = nend
                         nb_ = j - ni
                         if nb_:
-                            while wbits < nb_:
-                                chunk = seg[spos : spos + 6]
-                                if not chunk:
-                                    raise ValueError("JPEG entropy data truncated")
-                                nb8 = len(chunk) << 3
-                                spos += len(chunk)
-                                window = (window << nb8) | int.from_bytes(chunk, "big")
-                                wbits += nb8
-                            wbits -= nb_
-                            bv = window >> wbits
-                            window &= _MASKS[wbits]
-                            t = ni + nb_ - 1
-                            while bv:
-                                if bv & 1:
-                                    capp(nzpos_all[t])
-                                    dapp(nzdelta_all[t])
-                                bv >>= 1
-                                t -= 1
+                            if bp + nb_ > nbits:
+                                raise ValueError("JPEG entropy data truncated")
+                            rext((bp, ni, nb_))
+                            bp += nb_
                         ni = j
                         if boundary is None:
                             zi = zend
@@ -1311,67 +1220,30 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                     else:  # slow path: finish the probe manually
                         r = (v >> 5) & 15
                         if v & 2048:  # new coefficient: read the sign bit
-                            if not wbits:
-                                chunk = seg[spos : spos + 6]
-                                if chunk:
-                                    nb8 = len(chunk) << 3
-                                    spos += len(chunk)
-                                    window = (window << nb8) | int.from_bytes(
-                                        chunk, "big"
-                                    )
-                                    wbits += nb8
-                                if not wbits:
-                                    raise ValueError("JPEG entropy data truncated")
-                            wbits -= 1
-                            val = p1 if window >> wbits else m1
-                            window &= _MASKS[wbits]
+                            if bp >= nbits:
+                                raise ValueError("JPEG entropy data truncated")
+                            val = p1 if peek[bp] >> 15 else m1
+                            bp += 1
                         else:  # EOBn whose extra bits overflowed the probe
-                            eobrun = 1 << r
-                            if r > wbits:
-                                chunk = seg[spos : spos + 6]
-                                if chunk:
-                                    nb8 = len(chunk) << 3
-                                    spos += len(chunk)
-                                    window = (window << nb8) | int.from_bytes(
-                                        chunk, "big"
-                                    )
-                                    wbits += nb8
-                                if r > wbits:
-                                    raise ValueError("JPEG entropy data truncated")
-                            wbits -= r
-                            eobrun += window >> wbits
-                            window &= _MASKS[wbits]
+                            if bp + r > nbits:
+                                raise ValueError("JPEG entropy data truncated")
+                            eobrun = (1 << r) + (peek[bp] >> (16 - r))
+                            bp += r
                             break
                     # ---- place the new coefficient (kinds 0 and 3-new) --
                     if zi + r < zend:
                         target = zpos_all[zi + r]
                         zi += r + 1
-                        j = ni
-                        while j < nend and nzpos_all[j] < target:
-                            j += 1
+                        j = bisect_left(nzpos_all, target, ni, nend)
                     else:  # zeros exhausted: pass the rest, no landing
                         target = None
                         j = nend
                     nb_ = j - ni
                     if nb_:
-                        while wbits < nb_:
-                            chunk = seg[spos : spos + 6]
-                            if not chunk:
-                                raise ValueError("JPEG entropy data truncated")
-                            nb8 = len(chunk) << 3
-                            spos += len(chunk)
-                            window = (window << nb8) | int.from_bytes(chunk, "big")
-                            wbits += nb8
-                        wbits -= nb_
-                        bv = window >> wbits
-                        window &= _MASKS[wbits]
-                        t = ni + nb_ - 1
-                        while bv:
-                            if bv & 1:
-                                capp(nzpos_all[t])
-                                dapp(nzdelta_all[t])
-                            bv >>= 1
-                            t -= 1
+                        if bp + nb_ > nbits:
+                            raise ValueError("JPEG entropy data truncated")
+                        rext((bp, ni, nb_))
+                        bp += nb_
                         ni = j
                     if target is None:
                         zi = zend
@@ -1379,34 +1251,19 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                         papp((target << 32) | (val + 0x80000000))
             if eobrun > 0:
                 # EOB-run tail for THIS block (may start mid-block): one
-                # correction bit per remaining nonzero, window-read
+                # correction bit per remaining nonzero
                 nb_ = nend - ni
                 if nb_:
-                    while wbits < nb_:
-                        chunk = seg[spos : spos + 6]
-                        if not chunk:
-                            raise ValueError("JPEG entropy data truncated")
-                        nb8 = len(chunk) << 3
-                        spos += len(chunk)
-                        window = (window << nb8) | int.from_bytes(chunk, "big")
-                        wbits += nb8
-                    wbits -= nb_
-                    bv = window >> wbits
-                    window &= _MASKS[wbits]
-                    t = ni + nb_ - 1
-                    while bv:
-                        if bv & 1:
-                            capp(nzpos_all[t])
-                            dapp(nzdelta_all[t])
-                        bv >>= 1
-                        t -= 1
+                    if bp + nb_ > nbits:
+                        raise ValueError("JPEG entropy data truncated")
+                    rext((bp, ni, nb_))
+                    bp += nb_
                 eobrun -= 1
                 b += 1
                 # ---- bulk EOB-run tail: whole full-tail blocks at once --
                 # Their correction bits are contiguous in the stream AND
-                # contiguous in the nz flat arrays, so extract them with
-                # one unpackbits slice + nonzero instead of per-block
-                # Python. Capped at restart boundaries.
+                # contiguous in the nz flat arrays: one run covers them.
+                # Capped at restart boundaries.
                 while eobrun > 0 and b < nblocks:
                     limit = nblocks if not ri else min(nblocks, (b // ri + 1) * ri)
                     e_blocks = min(eobrun, limit - b)
@@ -1414,29 +1271,10 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                         break
                     jj = noffs[b + e_blocks] - noffs[b]
                     if jj:
-                        ub = ub_cache[seg_idx]
-                        if ub is None:
-                            ub = np.unpackbits(np.frombuffer(seg, np.uint8))
-                            ub_cache[seg_idx] = ub
-                        cur = (spos << 3) - wbits
-                        if cur + jj > len(ub):
+                        if bp + jj > nbits:
                             raise ValueError("JPEG entropy data truncated")
-                        setrel = np.nonzero(ub[cur : cur + jj])[0]
-                        if len(setrel):
-                            sel = noffs[b] + setrel
-                            cchunks.append(nzpos_np[sel])
-                            dchunks.append(nzdelta_np[sel])
-                        off = cur + jj
-                        byte = off >> 3
-                        rem = off & 7
-                        if rem and byte < len(seg):
-                            window = seg[byte] & _MASKS[8 - rem]
-                            wbits = 8 - rem
-                            spos = byte + 1
-                        else:
-                            window = 0
-                            wbits = 0
-                            spos = byte + (1 if rem else 0)
+                        rext((bp, noffs[b], jj))
+                        bp += jj
                     eobrun -= e_blocks
                     b += e_blocks
                     # a run reaching a restart boundary stops here; the
@@ -1444,11 +1282,14 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                     # the round-4 restart() semantics)
                 continue
             b += 1
-        if cpos:
-            cchunks.append(np.array(cpos, np.int64))
-            dchunks.append(np.array(cdel, np.int64))
-        if cchunks:
-            cf[np.concatenate(cchunks)] += np.concatenate(dchunks).astype(np.int32)
+        if runs:
+            rr = np.array(runs, np.int64).reshape(-1, 3)
+            cnt = rr[:, 2]
+            within = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+            # bit p of the stream is the top bit of the window starting at p
+            bit_set = np.asarray(peek)[np.repeat(rr[:, 0], cnt) + within] >> 15 == 1
+            sel = (np.repeat(rr[:, 1], cnt) + within)[bit_set]
+            cf[nzpos_np[sel]] += nzdelta_np[sel].astype(np.int32)
         if packedr:
             pk = np.array(packedr, np.int64)
             cf[pk >> 32] = (pk & 0xFFFFFFFF) - 0x80000000

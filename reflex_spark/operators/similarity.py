@@ -536,61 +536,6 @@ def exact_topk_multi(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def ivf_topk_multi(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 20,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN for a (small) query set in ONE pass over the table:
-    (__q_id, vec_id, cos_sim, rank). Per-query probe lists are computed
-    driver-side from the bounded centroid set (n_lists × n_queries scalar
-    distances — control-plane work) and broadcast; candidate selection is
-    `ivf_list IN probe_lists[q]`, so at scale a probe still reads n_probe
-    list-partitions per query instead of the full table."""
-    import numpy as np
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    assigned, centroids = ivf_assign(embeddings, n_lists, id_col=id_col, vec_col=vec_col)
-    q_rows = queries.select(id_col, vec_col).collect()  # bounded query set
-    if not q_rows:
-        raise ValueError("ivf_topk_multi: queries DataFrame is empty")
-    spark = embeddings.sparkSession
-    # only the driver-computed probe lists are materialized; the id and
-    # vector columns keep their ORIGINAL types via the join below (a
-    # rebuilt "long/array<float>" schema silently narrowed double
-    # vectors and rejected non-long ids)
-    probe_rows = []
-    for r in q_rows:
-        qv = np.array(r[vec_col], dtype=np.float64)
-        lists = np.argsort(((centroids - qv) ** 2).sum(axis=1))[:n_probe].tolist()
-        probe_rows.append((r[id_col], [int(x) for x in lists]))
-    ql = spark.createDataFrame(
-        probe_rows,
-        T.StructType(
-            [
-                T.StructField("__q_id", queries.schema[id_col].dataType),
-                T.StructField("__q_lists", T.ArrayType(T.IntegerType())),
-            ]
-        ),
-    )
-    q = queries.select(
-        F.col(id_col).alias("__q_id"), F.col(vec_col).alias("__q_vec")
-    ).join(F.broadcast(ql), "__q_id")
-    scored = (
-        assigned.join(F.broadcast(q), F.array_contains(F.col("__q_lists"), F.col("ivf_list")))
-        .where(F.col(id_col) != F.col("__q_id"))
-        .select("__q_id", id_col, cosine(F.col(vec_col), F.col("__q_vec")).alias("cos_sim"))
-    )
-    w = Window.partitionBy("__q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
 def lsh_bucketed_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -1453,12 +1398,15 @@ class IvfIndex:
 
     Layout under ``path``:
 
-    - ``centroids-<gen>/``  parquet ``(list_id int, centroid array)``
-      quantizer GENERATIONS — KBs each, broadcast at probe time. The
-      ledger names the live generation; a superseded one parks in the
-      garbage list until the next maintenance op sweeps it (deferred
-      vacuum), so a probe that snapshotted the previous ledger still
-      finds its quantizer on disk.
+    - ``centroids-<gen>/``  parquet ``(list_id int, centroid
+      array<double>)`` quantizer GENERATIONS — KBs each, one schema in
+      every generation, read driver-side once per (build, generation)
+      and inlined into assignment and probe routing as a plan literal
+      (a broadcast one-row frame past ``_ASSIGN_LITERAL_CAP``). The
+      ledger names the live generation; a superseded one parks in
+      the garbage list until the next maintenance op sweeps it
+      (deferred vacuum), so a probe that snapshotted the previous
+      ledger still finds its quantizer on disk.
     - ``lists/``      the corpus parquet PARTITIONED BY ``ivf_list``.
       Files the ledger references are IMMUTABLE: an append only ADDS
       files, and a split writes its two sides under two FRESH list ids
@@ -1469,7 +1417,9 @@ class IvfIndex:
       live centroid generation, and the garbage awaiting vacuum. Its
       atomic tmp+fsync+replace write is the COMMIT POINT of every
       maintenance op — a reader resolving through one ledger read sees
-      the pre- or post-commit index, never a half-state.
+      the pre- or post-commit index, never a half-state. ``build_id``
+      (fresh per ``build``) plus the generation name the quantizer, so
+      a handle's quantizer cache cannot survive a rebuild of its path.
 
     Lifecycle and costs:
 
@@ -1505,8 +1455,11 @@ class IvfIndex:
     - ``probe``   — lock-free SNAPSHOT read: one committed ledger read
       resolves the quantizer generation AND the probed lists' exact
       file set, so a probe racing any maintenance op sees pre- or
-      post-commit state, never neither. O(lists probed), independent
-      of corpus size;
+      post-commit state, never neither. Each query routes to its
+      n_probe nearest lists with the cached quantizer expression (no
+      centroid scan, join or window), and the pinned scan takes its
+      schema from one file footer. O(lists probed), independent of
+      corpus size;
     - ``vacuum`` / ``repair`` — the deferred sweep run implicitly at
       the start of every maintenance op (or explicitly), and the full
       O(index) fsck for the one failure the cheap sweep cannot see
@@ -1525,10 +1478,10 @@ class IvfIndex:
     copied set still serving as the batch's exact file identity. The
     data plane is already pure Spark and carries over unchanged.
 
-    Assignment recipe (broadcast centroids + sqdist + row_number with
-    the (distance, list_id) tie-break) is IDENTICAL to the judged
-    closed-form queries, so a DuckDB oracle can replay index contents
-    bit-for-bit.
+    Assignment and routing rule (``sqdist`` to every centroid, ordered
+    by (distance, list_id) — ties to the lower id) is IDENTICAL to the
+    judged closed-form queries' row_number form, so a DuckDB oracle can
+    replay index contents and probe results bit-for-bit.
     """
 
     def __init__(
@@ -1553,14 +1506,14 @@ class IvfIndex:
         # probe-race tests hook here instead of monkey-patching
         # internals (same pattern as TxTable's commit seam)
         self._inject_before_commit = None
-        # per-generation quantizer VALUES, read driver-side (KBs — the
+        # the snapshot quantizer's VALUES, read driver-side (KBs — the
         # same POSIX control-plane class as the ledger and the append
-        # footer counts), plus the per-generation assignment Column
-        # built from them. Keyed on the generation, so a split/compact
-        # commit invalidates both by construction; dies with the
+        # footer counts), plus the Columns built from them (see
+        # _nearest). Keyed on (build id, generation): a split/compact
+        # commit bumps the generation and a rebuild mints a new build
+        # id, so either invalidates both by construction; dies with the
         # instance. (Plan metadata only — never row data.)
-        self._quant_cache: tuple[int, list] | None = None
-        self._assign_cache: tuple[int, Column] | None = None
+        self._quant_cache: tuple[tuple, list, dict] | None = None
 
     # -- control plane ----------------------------------------------------
 
@@ -1747,20 +1700,28 @@ class IvfIndex:
             F.col("list_id").alias("__cid"), F.col("centroid").alias("__cv")
         )
 
+    @staticmethod
+    def _quant_key(meta: dict) -> tuple:
+        """Identity of the snapshot's quantizer: the generation alone is
+        not one — ``build`` restarts it at 0, so a handle that cached
+        generation 0 of the previous build would keep assigning and
+        routing with a quantizer its path no longer holds."""
+        return (meta.get("build_id"), meta["centroid_gen"])
+
     def _quantizer(self, meta: dict) -> list[tuple[int, list[float]]]:
         """The generation's ``(list_id, centroid)`` values, read
-        driver-side with pyarrow and cached per generation — the
-        quantizer is KBs by contract ("broadcast at probe time"), and
-        the control plane is already POSIX-local (ledger, claims,
-        footer counts), so this is the same class of op. Parquet
-        doubles round-trip exactly through pyarrow, so the values are
-        bit-identical to what a Spark scan of the same files returns."""
+        driver-side with pyarrow and cached per (build, generation) —
+        the quantizer is KBs by contract, and the control plane is
+        already POSIX-local (ledger, claims, footer counts), so this is
+        the same class of op. Parquet doubles round-trip exactly
+        through pyarrow, so the values are bit-identical to what a
+        Spark scan of the same files returns."""
         import os
 
         import pyarrow.parquet as _pq
 
-        gen = meta["centroid_gen"]
-        if self._quant_cache is not None and self._quant_cache[0] == gen:
+        key = self._quant_key(meta)
+        if self._quant_cache is not None and self._quant_cache[0] == key:
             return self._quant_cache[1]
         d = self._centroid_dir(meta)
         rows: list[tuple[int, list[float]]] = []
@@ -1777,7 +1738,7 @@ class IvfIndex:
                 )
             )
         rows.sort(key=lambda r: r[0])
-        self._quant_cache = (gen, rows)
+        self._quant_cache = (key, rows, {})
         return rows
 
     def _write_centroids(
@@ -1862,18 +1823,35 @@ class IvfIndex:
         by an uncommitted maintenance op are invisible, and garbage
         still awaiting vacuum is ignored."""
         files = self._ledger_files(meta, lids)
-        base = f"{self.path}/lists"
-        if files:
-            return self.spark.read.option("basePath", base).parquet(*files)
         # empty selection: borrow any referenced file for the schema
-        any_file = next(iter(self._ledger_files(meta)), None)
+        any_file = next(iter(files or self._ledger_files(meta)), None)
         if any_file is None:
             raise ValueError("IvfIndex is empty: no files in the ledger")
-        return (
-            self.spark.read.option("basePath", base)
-            .parquet(any_file)
-            .where(F.lit(False))
+        reader = self.spark.read.schema(self._scan_schema(any_file)).option(
+            "basePath", f"{self.path}/lists"
         )
+        if files:
+            return reader.parquet(*files)
+        return reader.parquet(any_file).where(F.lit(False))
+
+    @staticmethod
+    def _scan_schema(path: str):
+        """The pinned scan's schema, read driver-side from one data
+        file's footer: Spark stores the schema it wrote under
+        ``org.apache.spark.sql.parquet.row.metadata`` (the same string
+        its own inference deserializes), plus the ``ivf_list int``
+        partition column. Without it every ``read.parquet(*files)`` runs
+        a 1-task schema-inference job."""
+        import json
+
+        import pyarrow.parquet as _pq
+        from pyspark.sql.types import IntegerType, StructType
+
+        kv = _pq.read_metadata(path).metadata
+        schema = StructType.fromJson(
+            json.loads(kv[b"org.apache.spark.sql.parquet.row.metadata"])
+        )
+        return schema.add("ivf_list", IntegerType())
 
     def read_lists(self) -> DataFrame:
         """The whole corpus as one ledger-pinned snapshot read."""
@@ -1911,101 +1889,83 @@ class IvfIndex:
                 out[lid_s] = n
         return out
 
-    def _physical_counts(self) -> dict[int, int]:
-        """Per-list row counts from the WHOLE written tree — ivf_list is
-        the partition column, so the scan reads no data columns, but it
-        touches every file's footer: build/repair only, never per batch."""
-        return {
-            int(r["ivf_list"]): r["n"]
-            for r in self.spark.read.parquet(f"{self.path}/lists")
-            .groupBy("ivf_list")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # bounded: one row per list
-        }
-
     #: quantizer-size bound (list-id + element count) for inlining the
     #: centroid array as one SQL literal; beyond it the array is
     #: assembled cluster-side and broadcast (a giant literal would bloat
     #: the plan tree and its analysis instead of the data path)
     _ASSIGN_LITERAL_CAP = 8192
 
-    @staticmethod
-    def _argmin_list(cents: Column, vec: Column) -> Column:
-        """Per-row nearest-centroid id over an ``array<struct<__cid,
-        __cv>>`` column: ``array_min`` over ``struct(__d, __cid)``
-        compares (distance, list_id) lexicographically, so the selection
-        rule — and therefore every judged oracle replay — is
-        bit-identical to the previous ROW_NUMBER-window argmin (ties to
-        the lower id; same ``sqdist`` expression per pair), while the
-        plan needs NO per-vector shuffle at all: the old form exploded
-        the batch n_lists-fold through a broadcast join and shuffled
-        every candidate row into a row_number window (guide §2.4 —
-        remove shuffles outright; pinned equivalent by pytest incl.
-        exact-tie inputs)."""
-        return F.array_min(
-            F.transform(
+    def _nearest(
+        self, frame: DataFrame, meta: dict, vec_col: str, n: int | None
+    ) -> tuple[DataFrame, Column]:
+        """The ONE quantizer-expression path, shared by assignment and
+        probe routing: returns ``frame`` (joined to the quantizer when
+        it rides as a broadcast frame) and a per-row Column over the
+        snapshot quantizer — with ``n=None`` the nearest list id
+        (``array_min``), else the ``n`` nearest ``struct(__d, __cid)``
+        (``slice(array_sort(...), 1, n)``). Both order the same
+        ``struct(sqdist, list_id)`` lexicographically, so the selection
+        is bit-identical to a ROW_NUMBER window over (distance, list_id)
+        — ties to the lower id — while the plan needs no centroid scan,
+        no join and no per-vector shuffle (guide §2.4; pinned against
+        the window form by pytest, exact ties included).
+
+        The quantizer is inlined as one SQL literal within
+        ``_ASSIGN_LITERAL_CAP`` (doubles as ``CAST('<repr>' AS
+        DOUBLE)``: repr() is the shortest round-tripping form and SQL
+        string→double parsing is correctly rounded, so the literal
+        equals the stored double), else assembled cluster-side and
+        broadcast as a one-row frame. The built Columns are cached per
+        quantizer: parsing the quantizer-sized expression and building
+        the higher-order function costs ~0.15s of Py4J round-trips,
+        pure driver overhead at poll-append and probe cadence."""
+        quant = self._quantizer(meta)
+        memo = self._quant_cache[2]
+        key = (vec_col, n)
+        if sum(1 + len(v) for _, v in quant) > self._ASSIGN_LITERAL_CAP:
+            cent_arr = self._centroids(meta).agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("__cid"), F.col("__cv")))
+                ).alias("__cents")
+            )
+            frame = frame.join(F.broadcast(cent_arr))
+        elif "__lit" not in memo:
+            memo["__lit"] = F.expr(
+                "array("
+                + ",".join(
+                    "named_struct('__cid',{cid},'__cv',array({vs}))".format(
+                        cid=int(cid),
+                        vs=",".join(f"CAST('{x!r}' AS DOUBLE)" for x in cv),
+                    )
+                    for cid, cv in quant
+                )
+                + ")"
+            )
+        if key not in memo:
+            cents = memo["__lit"] if "__lit" in memo else F.col("__cents")
+            by_dist = F.transform(
                 cents,
                 lambda c: F.struct(
-                    sqdist(vec, c["__cv"]).alias("__d"),
+                    sqdist(F.col(vec_col), c["__cv"]).alias("__d"),
                     c["__cid"].alias("__cid"),
                 ),
             )
-        )["__cid"]
+            memo[key] = (
+                F.array_min(by_dist)["__cid"]
+                if n is None
+                else F.slice(F.array_sort(by_dist), 1, n)
+            )
+        return frame, memo[key]
 
     def _assign(self, batch: DataFrame, meta: dict) -> DataFrame:
-        """Nearest-centroid assignment, pure JVM and SHUFFLE-FREE: the
-        (tiny, by contract) quantizer rides into the plan as an
-        array<struct> — inlined as a literal when small, broadcast as a
-        one-row frame beyond ``_ASSIGN_LITERAL_CAP`` — and each row
-        computes its own argmin with the deterministic (distance,
-        list_id) tie-break. Distances use the same ``sqdist`` expression
-        as before, so assignments are bit-identical to the judged
-        closed-form oracles."""
-        quant = self._quantizer(meta)
-        vec = F.col(self.vec_col)
-        size = sum(1 + len(v) for _, v in quant)
-        if size <= self._ASSIGN_LITERAL_CAP:
-            gen = meta["centroid_gen"]
-            if self._assign_cache is not None and self._assign_cache[0] == gen:
-                best = self._assign_cache[1]
-            else:
-                # doubles as CAST('<repr>' AS DOUBLE): repr() is the
-                # shortest round-tripping form and SQL string→double
-                # parsing is correctly rounded, so the literal equals the
-                # stored double. The built Column is cached per
-                # generation: parsing the quantizer-sized expression and
-                # constructing the higher-order argmin costs ~0.15s of
-                # Py4J round-trips per call, pure driver overhead at
-                # poll-append cadence (guide §1.2 per-task work — here
-                # the "task" is the driver's plan build).
-                arr_sql = "array(" + ",".join(
-                    "named_struct('__cid',{cid},'__cv',array({vs}))".format(
-                        cid=int(cid),
-                        vs=",".join(
-                            f"CAST('{x!r}' AS DOUBLE)" for x in cv
-                        ),
-                    )
-                    for cid, cv in quant
-                ) + ")"
-                best = self._argmin_list(F.expr(arr_sql), vec).alias(
-                    "ivf_list"
-                )
-                self._assign_cache = (gen, best)
-            return batch.select(self.id_col, self.vec_col, best)
-        cent_arr = self._centroids(meta).agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("__cid"), F.col("__cv")))
-            ).alias("__cents")
+        """Nearest-centroid assignment, pure JVM and shuffle-free (see
+        ``_nearest``): distances use the same ``sqdist`` expression as
+        the judged closed-form oracles, so assignments are bit-identical
+        to them."""
+        batch, best = self._nearest(
+            batch.select(self.id_col, self.vec_col), meta, self.vec_col, None
         )
-        return (
-            batch.select(self.id_col, self.vec_col)
-            .join(F.broadcast(cent_arr))
-            .select(
-                self.id_col,
-                self.vec_col,
-                self._argmin_list(F.col("__cents"), vec).alias("ivf_list"),
-            )
-        )
+        return batch.select(self.id_col, self.vec_col, best.alias("ivf_list"))
 
     @classmethod
     def build(
@@ -2030,6 +1990,7 @@ class IvfIndex:
         partition over the fresh index."""
         import os
         import shutil
+        import uuid
 
         idx = cls(spark, path, id_col, vec_col)
         os.makedirs(path, exist_ok=True)
@@ -2045,14 +2006,24 @@ class IvfIndex:
             # store centroids as array<double>: float seeds widen
             # exactly, and re-split means (decimal-sum / count doubles)
             # then keep their full precision instead of being silently
-            # narrowed by the seed schema
-            centroids.select(
-                "list_id",
-                F.transform(
-                    F.col("centroid"), lambda x: x.cast("double")
-                ).alias("centroid"),
-            ).write.parquet(f"{path}/centroids-0")
-            boot = {"centroid_gen": 0}
+            # narrowed by the seed schema. The quantizer is KBs by
+            # contract: collect it and write generation 0 through the
+            # same driver-side writer as every later generation, so
+            # the schema (list_id int, centroid array<double>) is the
+            # same in all of them whatever the caller's types
+            idx._write_centroids(
+                [
+                    (r["list_id"], r["centroid"])
+                    for r in centroids.select(
+                        "list_id",
+                        F.transform(
+                            F.col("centroid"), lambda x: x.cast("double")
+                        ).alias("centroid"),
+                    ).collect()  # bounded: one row per list
+                ],
+                f"{path}/centroids-0",
+            )
+            boot = {"build_id": uuid.uuid4().hex, "centroid_gen": 0}
             # the assignment computes ONCE (inside the write); the
             # ledger is then derived from the WRITTEN FILES — a name
             # listing plus driver-side footer sums — so it cannot
@@ -2087,7 +2058,7 @@ class IvfIndex:
                     "counts": counts,
                     "files": files,
                     "next_list_id": next_id,
-                    "centroid_gen": 0,
+                    **boot,
                     "garbage": [],
                 }
             )
@@ -2502,14 +2473,16 @@ class IvfIndex:
         retries: int = 2,
         eager: bool = False,
     ) -> DataFrame:
-        """Probe job: broadcast centroids, read EXACTLY the probed
-        lists' ledger-pinned files, cosine top-k within them.
-        ``queries`` is ``(q_id, qv)``; returns
-        ``(q_id, vec_id-as-id_col, cos_sim)``.
+        """Probe job: route every query to its ``n_probe`` nearest lists
+        with the cached quantizer expression (``_nearest`` — no centroid
+        scan, join or window), read EXACTLY the probed lists'
+        ledger-pinned files, cosine top-k within them. ``queries`` is
+        ``(q_id, qv)`` keyed by ``q_id``; returns ``(q_id,
+        vec_id-as-id_col, cos_sim)``.
 
         Lock-free and snapshot-consistent against every LEDGER-COMMITTING
         maintenance op (append / split / compact / vacuum / repair):
-        centroids and file set both resolve through ONE committed ledger
+        quantizer and file set both resolve through ONE committed ledger
         read, so a probe racing those sees the pre- or post-commit
         index, never a half-state. Pinned files survive at least one
         full maintenance interval (deferred vacuum); if an explicit
@@ -2522,14 +2495,16 @@ class IvfIndex:
         deferred-vacuum default — only an operator-issued ``vacuum()``
         while a probe is in flight hits it). ``eager=True`` closes that:
         the top-k is MATERIALIZED inside the retry loop (bounded —
-        ``|queries| x k`` rows by construction) and returned as a local
-        DataFrame no later sweep can invalidate; a sweep that races the
-        materialization itself is retried on a fresh snapshot. Use it
-        when probes run concurrently with explicit maintenance (the
-        streaming integration does). ``build`` is the one op OUTSIDE
-        the guarantee — it replaces the table wholesale (ledger
-        included), so a probe racing a rebuild fails cleanly after its
-        retries rather than returning partial data."""
+        ``|queries| x k`` rows by construction) as one Arrow table and
+        returned as a driver-held local DataFrame no later sweep can
+        invalidate — no Row pickling and no Python worker on the
+        caller's next action; a sweep that races the materialization
+        itself is retried on a fresh snapshot. Use it when probes run
+        concurrently with explicit maintenance (the streaming
+        integration does). ``build`` is the one op OUTSIDE the
+        guarantee — it replaces the table wholesale (ledger included),
+        so a probe racing a rebuild fails cleanly after its retries
+        rather than returning partial data."""
         import os
 
         from pyspark.sql import Window
@@ -2539,25 +2514,15 @@ class IvfIndex:
         for _ in range(max(1, retries)):
             try:
                 meta = self._read_meta()
-                cent = self._centroids(meta)
-                wq = Window.partitionBy("q_id").orderBy("__d", "__cid")
-                qprobe = (
-                    queries.join(F.broadcast(cent))
-                    .withColumn(
-                        "__d", sqdist(F.col("qv"), F.col("__cv"))
-                    )
-                    .withColumn("__rnk", F.row_number().over(wq))
-                    .where(F.col("__rnk") <= n_probe)
-                    .select(
-                        "q_id", "qv", F.col("__cid").alias("ivf_list")
-                    )
+                routed, near = self._nearest(
+                    queries, meta, "qv", max(0, n_probe)
+                )
+                qprobe = routed.select(
+                    "q_id", "qv", F.explode(near["__cid"]).alias("ivf_list")
                 )
                 probed = {
-                    r["ivf_list"]
-                    for r in qprobe.select("ivf_list")
-                    .distinct()
-                    .collect()
-                }  # bounded: <= |queries| x n_probe
+                    r["ivf_list"] for r in qprobe.select("ivf_list").collect()
+                }  # bounded: |queries| x n_probe rows
                 pinned = self._ledger_files(meta, lids=probed)
                 gone = [p for p in pinned if not os.path.exists(p)]
                 if not os.path.isdir(self._centroid_dir(meta)):
@@ -2569,9 +2534,9 @@ class IvfIndex:
                 last_err = e  # snapshot swept mid-resolve: retry fresh
                 continue
             except Exception as e:  # noqa: BLE001 — inspect, then retry
-                # a sweep racing the qprobe collect (the centroid scan
-                # that resolves the probed-list set) surfaces as a JVM
-                # FileNotFoundException wrapped in an untyped Py4J
+                # a sweep racing the routing collect (above the literal
+                # cap it scans the quantizer generation) surfaces as a
+                # JVM FileNotFoundException wrapped in an untyped Py4J
                 # error — same shape as the eager materialization race
                 if "FileNotFoundException" not in str(e):
                     raise
@@ -2599,7 +2564,7 @@ class IvfIndex:
             if not eager:
                 return out
             try:
-                rows = out.collect()  # bounded: |queries| x k rows
+                table = out.toArrow()  # bounded: |queries| x k rows
             except Exception as e:  # noqa: BLE001 — inspect, then retry
                 # a sweep racing the materialization surfaces as a JVM
                 # FileNotFoundException wrapped in an untyped Py4J error
@@ -2608,10 +2573,11 @@ class IvfIndex:
                     raise
                 last_err = e
                 continue
-            # bounded |queries| x k rows: one partition, not one slice
-            # per core — createDataFrame parallelizes over
-            # defaultParallelism, so downstream actions (the caller's
-            # localCheckpoint / sink write) would schedule a no-op task
-            # per core, a cost that GROWS with cluster width
-            return self.spark.createDataFrame(rows, out.schema).coalesce(1)
+            # an Arrow table becomes a driver-held local relation: no
+            # Python worker unpickles Rows on the caller's next action
+            # (~1s per probe with a list of Rows). One partition, not
+            # one slice per core, so downstream actions (the caller's
+            # localCheckpoint / sink write) schedule one task, not a
+            # no-op task per core
+            return self.spark.createDataFrame(table, out.schema).coalesce(1)
         raise last_err  # type: ignore[misc]

@@ -11,7 +11,6 @@ from reflex_spark.operators.similarity import (
     cosine_pairs_blocked,
     cosine_topk,
     exact_topk_multi,
-    ivf_topk_multi,
     lsh_bucket_int,
     lsh_bucketed_topk,
     norm,

@@ -219,6 +219,10 @@ class EventLog:
     # the directory, not the wall clock, so a fixed base plus seconds-apart
     # offsets never trips maxFileAge).
     _MTIME_BASE = 1_000_000_000
+    # older than any file the stream can list: logical stamps start at
+    # _MTIME_BASE, wall-clock mtimes are later still (36500 days > now
+    # minus _MTIME_BASE for wall clocks up to 2101)
+    _STREAM_MAX_FILE_AGE = "36500d"
 
     def _data_files(self) -> set[str]:
         """The log's current data-file paths (part-* only)."""
@@ -493,8 +497,20 @@ class EventLog:
     def read_stream(self, max_files_per_trigger: int | None = None) -> DataFrame:
         """Structured Streaming source over the log (reference
         EventsTable.Stream, rsql/eventstable.go:259-287). The checkpoint's
-        file ledger is the cursor; maxFilesPerTrigger ≈ WithEventLookupLimit."""
-        reader = self.spark.readStream.schema(EVENT_SCHEMA)
+        file ledger is the cursor; maxFilesPerTrigger ≈ WithEventLookupLimit.
+
+        ``maxFileAge`` is lifted above the whole logical-mtime range: a
+        live follower can list a part-file in the window between the
+        append's parquet commit and ``_stamp_commit_order``, so it
+        records the file's wall-clock mtime. With Spark's default of 7
+        days that moves the source's purge threshold to a week before
+        now, and every file stamped after it (``_MTIME_BASE`` + seq,
+        i.e. 2001) counts as too old and is skipped for good. The cost
+        is that the source's seen-file map is never purged: one entry
+        per log file, the same order as its checkpoint file log."""
+        reader = self.spark.readStream.schema(EVENT_SCHEMA).option(
+            "maxFileAge", self._STREAM_MAX_FILE_AGE
+        )
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return reader.parquet(self.path)

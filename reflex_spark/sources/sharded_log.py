@@ -60,9 +60,12 @@ class ShardedEventLog:
 
     def read_stream(self, max_files_per_trigger: int | None = None) -> DataFrame:
         """One streaming source over all shards (glob path); the checkpoint
-        tracks files per shard directory."""
-        reader = self.spark.readStream.schema(EVENT_SCHEMA).option(
-            "pathGlobFilter", "*.parquet"
+        tracks files per shard directory. ``maxFileAge`` as in
+        ``EventLog.read_stream``: shards stamp logical mtimes too."""
+        reader = (
+            self.spark.readStream.schema(EVENT_SCHEMA)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFileAge", EventLog._STREAM_MAX_FILE_AGE)
         )
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -8,8 +8,6 @@ actually registered (and vice versa)."""
 
 from __future__ import annotations
 
-import pytest
-
 import ast
 from pathlib import Path
 
@@ -97,7 +95,6 @@ def test_driver_window_is_rotated_and_green_capable():
     assert len(q) == len(set(q))
 
 
-@pytest.mark.slow  # multi-minute-class probe; default run excluded (r17 verify budget), runs under -m slow
 def test_every_oracle_parses_and_plans_in_duckdb():
     """Fast gate (seconds, not the 30-minute two-SF value sweep): every
     registered oracle must at least PARSE and PLAN in DuckDB against the

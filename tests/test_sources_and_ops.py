@@ -121,6 +121,64 @@ def test_consumer_lag_and_progress_metrics(spark, tmp_path):
         metrics.detach()
 
 
+def test_live_follower_keeps_appends_stamped_after_it_listed(spark, tmp_path):
+    """A live ``read_stream`` follower can list an append's part-file in
+    the window between its parquet commit and ``_stamp_commit_order``
+    (a follower whose foreachBatch is busy across appends hits it at
+    random), so the file source records the wall-clock mtime. Every
+    later append — stamped ``_MTIME_BASE`` + seq, i.e. 2001 — must
+    still arrive: under the file source's default 7-day ``maxFileAge``
+    they counted as too old and were skipped for good. The race is
+    forced through the stamp step so it happens on every run."""
+    import threading
+    import time
+
+    from reflex_spark.sources.memory import make_events
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.append(make_events(spark, [(1, "a0")]))
+    got, lock = set(), threading.Lock()
+
+    def sink(df, _batch_id):
+        ids = [r[0] for r in df.select("event_id").collect()]
+        with lock:
+            got.update(ids)
+
+    def wait_for(n, timeout):
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            with lock:
+                if len(got) >= n:
+                    return True
+            time.sleep(0.05)
+        return False
+
+    q = (
+        log.read_stream()
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    try:
+        assert wait_for(1, 60)
+        stamp = log._stamp_commit_order
+
+        def stamp_after_follower_listed(seq, already):
+            assert wait_for(seq, 60)  # the unstamped file was delivered
+            stamp(seq, already)
+
+        log._stamp_commit_order = stamp_after_follower_listed
+        log.append(make_events(spark, [(1, "a1")]))
+        del log._stamp_commit_order
+        for i in range(2, 5):
+            log.append(make_events(spark, [(1, f"a{i}")]))
+        wait_for(5, 30)
+        assert got == {1, 2, 3, 4, 5}
+    finally:
+        q.stop()
+
+
 def test_trace_roundtrip(spark, tmp_path):
     ctx = SpanContext(trace_id=bytes(range(16)), span_id=bytes(range(8)))
     raw = marshal(ctx)
@@ -1855,3 +1913,231 @@ def test_ivf_split_sides_born_compact(spark, tmp_path):
         assert len(meta["files"][str(nid)]) == 1, (
             f"split list {nid} born fragmented: {meta['files'][str(nid)]}"
         )
+
+
+def _probe_reference(idx, queries, n_probe, k):
+    """The probe plan before quantizer-expression routing, rebuilt here
+    as the equivalence oracle: a Spark scan of the snapshot's quantizer
+    broadcast-joined to every query, a row_number window over (distance,
+    list_id) keeping n_probe lists per query, then the cosine top-k
+    window over the ledger-pinned lists."""
+    from pyspark.sql import Window
+
+    from reflex_spark.operators.similarity import cosine, sqdist
+
+    spark = idx.spark
+    meta = idx._read_meta()
+    cent = spark.read.parquet(idx._centroid_dir(meta)).select(
+        F.col("list_id").alias("__cid"), F.col("centroid").alias("__cv")
+    )
+    wq = Window.partitionBy("q_id").orderBy("__d", "__cid")
+    qprobe = (
+        queries.join(F.broadcast(cent))
+        .withColumn("__d", sqdist(F.col("qv"), F.col("__cv")))
+        .withColumn("__rnk", F.row_number().over(wq))
+        .where(F.col("__rnk") <= n_probe)
+        .select("q_id", "qv", F.col("__cid").alias("ivf_list"))
+    )
+    lists = spark.read.option("basePath", f"{idx.path}/lists").parquet(
+        *idx._ledger_files(meta)
+    )
+    wt = Window.partitionBy("q_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id")
+    )
+    return (
+        lists.join(F.broadcast(qprobe), "ivf_list")
+        .where(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id", cosine(F.col("embedding"), F.col("qv")).alias("cos_sim"))
+        .withColumn("__rnk", F.row_number().over(wt))
+        .where(F.col("__rnk") <= k)
+        .drop("__rnk")
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_ivf_probe_routing_matches_window_plan(spark, tmp_path):
+    """Probe routing through the cached quantizer expression returns the
+    same rows, bit for bit, as the previous broadcast-join + row_number
+    plan: exact centroid-distance ties go to the lower list id (the
+    lower id sits at the LATER centroid position here, so position
+    order cannot fake it), exact cosine ties go to the lower vector id,
+    n_probe at or past the live list count probes everything, an empty
+    query frame returns no rows, and lazy and eager agree."""
+    from reflex_spark.operators.similarity import IvfIndex
+
+    vecs = [
+        (10, [1.0, 2.0]), (11, [2.0, 3.0]), (12, [0.5, 1.5]),
+        (20, [1.0, -1.0]), (21, [2.0, -2.0]), (22, [3.0, -3.0]),
+        (25, [3.0, -1.0]), (26, [0.2, -1.4]),
+        (30, [9.0, 10.0]), (31, [-9.0, -11.0]),
+    ]
+    idx = IvfIndex.build(
+        spark,
+        str(tmp_path / "idx"),
+        spark.createDataFrame(vecs, "vec_id long, embedding array<double>"),
+        spark.createDataFrame(
+            [(7, [1.0, 1.0]), (3, [1.0, -1.0]), (5, [10.0, 10.0]), (1, [-10.0, -10.0])],
+            "list_id int, centroid array<double>",
+        ),
+    )
+    # q 100 is exactly equidistant (1.0) from lists 7 and 3; q 101's
+    # cosine ties 20/21/22 at the k boundary; q 102 sits in list 5
+    q = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (101, [1.0, -1.0]), (102, [9.0, 9.0])],
+        "q_id long, qv array<double>",
+    )
+    for n_probe, k in ((1, 2), (2, 3), (4, 10), (9, 10)):
+        want = _rows(_probe_reference(idx, q, n_probe, k))
+        assert _rows(idx.probe(q, n_probe=n_probe, k=k)) == want
+        assert _rows(idx.probe(q, n_probe=n_probe, k=k, eager=True)) == want
+    # the tie cases are live, not vacuous
+    one = _rows(idx.probe(q, n_probe=1, k=2))
+    assert [r[1] for r in one if r[0] == 100] == [20, 25]  # list 3, not 7
+    assert [r[1] for r in one if r[0] == 101] == [20, 21]  # cos ties -> ids
+    assert len(_rows(idx.probe(q, n_probe=9, k=10))) == 3 * len(vecs)
+    empty = q.where(F.lit(False))
+    assert idx.probe(empty, n_probe=2, k=3).collect() == []
+    eager_empty = idx.probe(empty, n_probe=2, k=3, eager=True)
+    assert eager_empty.collect() == []
+    assert eager_empty.schema == idx.probe(q, n_probe=2, k=3).schema
+
+
+def test_ivf_probe_routing_above_literal_cap(spark, tmp_path):
+    """A quantizer past ``_ASSIGN_LITERAL_CAP`` (160 lists x 64 dims)
+    rides as a broadcast one-row frame instead of a plan literal; probe
+    rows still equal the window plan's, lazy and eager."""
+    import numpy as np
+
+    from reflex_spark.operators.similarity import IvfIndex
+
+    rng = np.random.default_rng(11)
+    n_lists, dim = 160, 64
+    assert n_lists * (1 + dim) > IvfIndex._ASSIGN_LITERAL_CAP
+    centers = rng.standard_normal((n_lists, dim))
+    label = rng.integers(0, n_lists, 1200)
+    vecs = centers[label] + 0.3 * rng.standard_normal((1200, dim))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = IvfIndex.build(
+        spark,
+        str(tmp_path / "idx"),
+        corpus,
+        spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+            "list_id int, centroid array<double>",
+        ),
+    )
+    q = corpus.where(F.col("vec_id") < 6).select(
+        (F.col("vec_id") + 10_000).alias("q_id"), F.col("embedding").alias("qv")
+    )
+    want = _rows(_probe_reference(idx, q, 3, 5))
+    assert len(want) == 6 * 5
+    assert _rows(idx.probe(q, n_probe=3, k=5)) == want
+    assert _rows(idx.probe(q, n_probe=3, k=5, eager=True)) == want
+
+
+def test_ivf_eager_probe_job_count(spark, tmp_path):
+    """Cost pin: an eager probe plus the caller's collect runs at most
+    6 Spark jobs (it ran 12 with a centroid scan, join, routing window,
+    two schema-inference jobs and Row materialization)."""
+    from reflex_spark.operators.similarity import IvfIndex
+    from reflex_spark.tables import load_tables
+    from tests.conftest import SF_SMALL
+
+    emb = load_tables(spark, SF_SMALL)["embeddings"]
+    cent = emb.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").cast("int").alias("list_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    idx = IvfIndex.build(spark, str(tmp_path / "idx"), emb.where(F.col("vec_id") < 300), cent)
+    idx.append(emb.where((F.col("vec_id") >= 300) & (F.col("vec_id") < 340)))
+    q = emb.where(F.col("vec_id") < 20).select(
+        (F.col("vec_id") + 100_000).alias("q_id"), F.col("embedding").alias("qv")
+    )
+    sc = spark.sparkContext
+    idx.probe(q, n_probe=2, k=5, eager=True).collect()  # warm the caches
+    sc.setJobGroup("ivf-probe-cost", "eager probe + collect")
+    try:
+        rows = idx.probe(q, n_probe=2, k=5, eager=True).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 20 * 5
+    jobs = sc.statusTracker().getJobIdsForGroup("ivf-probe-cost")
+    assert 0 < len(jobs) <= 6, jobs
+
+
+def test_ivf_rebuild_invalidates_old_handle_quantizer(spark, tmp_path):
+    """A handle that cached quantizer A keeps working after ``build``
+    rebuilds its path with quantizer B (generation back to 0): its
+    append and probe match a fresh handle's instead of assigning
+    ``[1, 0]`` to list 0, whose centroid is now ``[100, 0]``."""
+    from reflex_spark.operators.similarity import IvfIndex
+
+    path = str(tmp_path / "idx")
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [2.0, 0.0]), (3, [99.0, 0.0]), (4, [101.0, 0.0])],
+        schema,
+    )
+
+    def quantizer(near_origin):
+        far = 1 - near_origin
+        return spark.createDataFrame(
+            [(near_origin, [0.0, 0.0]), (far, [100.0, 0.0])],
+            "list_id int, centroid array<double>",
+        )
+
+    q = spark.createDataFrame([(1000, [1.0, 0.0])], "q_id long, qv array<double>")
+    old = IvfIndex.build(spark, path, corpus, quantizer(0))
+    assert old.append(spark.createDataFrame([(5, [1.5, 0.0])], schema)) == {0: 1}
+    assert [r[1] for r in old.probe(q, n_probe=1, k=1).collect()] == [1]
+
+    build_a = old._read_meta()["build_id"]
+    IvfIndex.build(spark, path, corpus, quantizer(1))
+    fresh = IvfIndex(spark, path)
+    assert fresh._read_meta()["build_id"] != build_a
+    assert fresh._read_meta()["centroid_gen"] == 0
+    assert _rows(old.probe(q, n_probe=1, k=2)) == _rows(
+        fresh.probe(q, n_probe=1, k=2)
+    )
+    assert old.append(spark.createDataFrame([(6, [1.0, 0.0])], schema)) == {1: 1}
+    assert fresh.append(spark.createDataFrame([(7, [1.0, 0.0])], schema)) == {1: 1}
+    assert _rows(old.probe(q, n_probe=1, k=9)) == _rows(
+        fresh.probe(q, n_probe=1, k=9)
+    )
+
+
+def test_ivf_quantizer_schema_same_in_every_generation(spark, tmp_path):
+    """``build`` writes generation 0 through the same writer as split
+    and compact: a caller's bigint list_id / float centroid seed still
+    lands as (list_id int32, centroid list<double>), equal to the
+    generation a later ``compact`` writes."""
+    import pyarrow.parquet as pq
+
+    from reflex_spark.operators.similarity import IvfIndex
+    from reflex_spark.tables import load_tables
+    from tests.conftest import SF_SMALL
+
+    emb = load_tables(spark, SF_SMALL)["embeddings"]
+    cent = emb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").cast("bigint").alias("list_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    assert dict(cent.dtypes)["list_id"] == "bigint"
+    root = tmp_path / "idx"
+    idx = IvfIndex.build(spark, str(root), emb.where(F.col("vec_id") < 60), cent)
+    idx.append(emb.where((F.col("vec_id") >= 60) & (F.col("vec_id") < 100)))
+    assert idx.compact()
+    assert idx._read_meta()["centroid_gen"] == 1
+
+    def schema(gen):
+        return pq.read_table(str(root / f"centroids-{gen}")).schema
+
+    assert schema(0) == schema(1)
+    assert str(schema(0).field("list_id").type) == "int32"
+    assert str(schema(0).field("centroid").type) == "list<element: double>"
