@@ -18,6 +18,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reflex_spark.control import claim, write_atomic
 from reflex_spark.operators.relational import top_k
 
 
@@ -457,62 +458,6 @@ def lsh_bucket_int(vec: str, planes: list[list[float]]) -> Column:
         for i, plane in enumerate(planes)
     )
     return F.expr(f"CAST(({terms}) AS INT)")
-
-
-def lsh_multiprobe_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 20,
-    num_planes: int = 4,
-    max_hamming: int = 1,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-probe LSH ANN for a (small) query set: score candidates in
-    every bucket within ``max_hamming`` bit flips of each query's
-    signature. Returns per-query top-k: (__q_id, vec_id, cos_sim, rank).
-
-    This is the standard recall lever for sign LSH: r=0 is the classic
-    single-bucket probe; r=num_planes scans everything (exact). The probe
-    set is enumerated as an explicit bucket list (2^p patterns filtered by
-    popcount of the XOR), so candidate selection stays an equi-join on the
-    bucket key — at 100 TB the bucket is a partition key and a probe reads
-    C(p, <=r) partitions, never the full table. Each row matches exactly
-    one bucket, so the join cannot duplicate candidates.
-    """
-    from pyspark.sql import Window
-
-    planes = _hyperplanes(num_planes, dim)
-    emb_b = embeddings.withColumn("__bucket", lsh_bucket_int(vec_col, planes))
-    q = queries.select(
-        F.col(id_col).alias("__q_id"),
-        F.col(vec_col).alias("__q_vec"),
-        lsh_bucket_int(vec_col, planes).alias("__q_bucket"),
-    )
-    probes = (
-        q.select(
-            "__q_id",
-            "__q_vec",
-            "__q_bucket",
-            F.explode(F.sequence(F.lit(0), F.lit((1 << num_planes) - 1))).alias("__bucket"),
-        )
-        .where(
-            F.bit_count(F.col("__bucket").bitwiseXOR(F.col("__q_bucket"))) <= max_hamming
-        )
-        .drop("__q_bucket")
-    )
-    scored = (
-        emb_b.join(F.broadcast(probes), "__bucket")
-        .where(F.col(id_col) != F.col("__q_id"))
-        .select(
-            "__q_id",
-            id_col,
-            cosine(F.col(vec_col), F.col("__q_vec")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("__q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def exact_topk_multi(
@@ -1465,14 +1410,10 @@ class IvfIndex:
       O(index) fsck for the one failure the cheap sweep cannot see
       (a crashed append's uncommitted files inside live partitions).
 
-    Object-store translation (the 100 TB deployment note — the sandbox
-    control plane is POSIX-local, mirroring what ``rblob/doc.go:1-16``
-    documents for the reference's bucket contract): ``_write_meta``'s
-    tmp+fsync+``os.replace`` commit becomes a conditional PUT
-    (``If-Match`` on the ledger object's ETag / generation — S3 2024+
-    conditional writes, GCS ``ifGenerationMatch``); ``_claim``'s
-    ``O_EXCL`` create becomes ``If-None-Match: *`` PUT on the claim
-    key; ``_scan_files``/``_vacuum_held`` directory listings become
+    Object-store translation (the 100 TB deployment note): the ledger
+    commit (``control.write_atomic``) and the writer claim
+    (``control.claim``) map as the ``reflex_spark.control`` docstring
+    says; ``_scan_files``/``_vacuum_held`` directory listings become
     prefix LIST calls; append's stage-then-``os.replace`` move becomes
     server-side COPY + DELETE (object stores have no rename), with the
     copied set still serving as the batch's exact file identity. The
@@ -1531,58 +1472,22 @@ class IvfIndex:
 
     def _write_meta(self, meta: dict) -> None:
         import json
-        import os
 
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._meta_path)
+        write_atomic(self._meta_path, json.dumps(meta))
 
     def list_counts(self) -> dict[int, int]:
         return {int(k): v for k, v in self._read_meta()["counts"].items()}
 
-    def _claim(self):
-        """Exclusive single-writer claim for the MAINTENANCE ops (build /
-        append / split / vacuum / repair): the ledger is a
-        read-modify-write file, so two concurrent writers would lose
-        counts or sweep each other's uncommitted output. Same O_EXCL
-        discipline as the blob sink's ``_writer.claim``. Probes take no
-        lock — they resolve everything through ONE committed ledger
-        snapshot, whose files survive at least until the next
-        maintenance op's deferred vacuum. A claim left by a crashed
-        writer refuses loudly until an operator removes it — the error
-        names the file."""
-        import contextlib
-        import os
-
-        path = os.path.join(self.path, "_writer.claim")
-
-        @contextlib.contextmanager
-        def held():
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                raise ValueError(
-                    f"another writer holds this index's claim ({path}): "
-                    "IvfIndex maintenance (build/append/split/vacuum) is "
-                    "single-writer — a concurrent writer would lose "
-                    "ledger counts or sweep uncommitted output. If that "
-                    "writer crashed, remove the claim file after "
-                    "confirming no maintenance job is live."
-                ) from None
-            try:
-                with os.fdopen(fd, "w", encoding="utf-8") as f:
-                    f.write(f"pid={os.getpid()}")
-                yield
-            finally:
-                try:
-                    os.remove(path)
-                except OSError:
-                    pass
-
-        return held()
+    def _claim(self) -> claim:
+        """Single-writer claim for the maintenance ops (build / append /
+        split / vacuum / repair). Probes take no lock: they resolve
+        everything through ONE committed ledger snapshot, whose files
+        survive at least until the next maintenance op's deferred vacuum."""
+        why = (
+            "IvfIndex maintenance is single-writer — a concurrent writer "
+            "would lose ledger counts or sweep uncommitted output"
+        )
+        return claim(f"{self.path}/_writer.claim", why)
 
     def _vacuum_held(self, meta: dict) -> dict:
         """Deferred sweep, under the claim: (a) garbage parked by

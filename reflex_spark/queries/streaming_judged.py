@@ -79,9 +79,13 @@ def stream_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consume the fixture through run() in 2000-event batches, merging
     each batch into a persistent rollup; return the rollup. Exactness of
     the incremental path against the one-shot SQL aggregate IS the test."""
+    import shutil
+
     log = _FixtureEventsLog(spark, sf_dir)
-    rollup_path = tempfile.mkdtemp(prefix="stream_rollup_") + "/table"
-    mat = MaterializedCounts(spark, rollup_path, keys=["event_type"], value_col="value")
+    base = tempfile.mkdtemp(prefix="stream_rollup_")
+    mat = MaterializedCounts(
+        spark, f"{base}/table", keys=["event_type"], value_col="value"
+    )
     # A fixed count of incremental merges at any SF (≈5 batches): the
     # correctness value is the merge across batch boundaries, not the
     # number of loop rounds — a constant limit made the bench O(SF) in
@@ -96,14 +100,19 @@ def stream_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         StreamOptions(to_head=True, batch_limit=batch_limit, drop_noops=False),
     )
     try:
-        run(spec)
-    except ErrHeadReached:
-        pass
-    return mat.read().select(
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
+        try:
+            run(spec)
+        except ErrHeadReached:
+            pass
+        out = mat.read().select(
+            "event_type",
+            F.col("n_events").cast("long").alias("n_events"),
+            F.col("sum_value").cast("double").alias("sum_value"),
+        )
+        out = out.localCheckpoint()  # materialize before temp-dir cleanup
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return out
 
 
 def _stamp_batch_order(src: str, seen: set[str], seq: int) -> None:
@@ -4794,7 +4803,7 @@ def tx_concurrent_retry_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table path race a MERGE against a DELETE. Writer B's delete commits
     — through the real commit protocol — at the exact version writer A's
     merge first tries to take, so A's attempt genuinely loses the
-    O_EXCL version race, unstages its staged files, and ``retries=1``
+    exclusive-create version race, unstages its staged files, and ``retries=1``
     re-executes the whole merge against the post-delete head.
 
     Pinned in-query: (a) the race really happened — A's merge needed
@@ -4846,7 +4855,7 @@ def tx_concurrent_retry_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # #6): at the instant A's merge first reaches the commit
         # protocol, B's delete commits FOR REAL through its own handle —
         # then A's commit hits the already-taken version file (the
-        # genuine O_EXCL race loss)
+        # genuine exclusive-create race loss)
         attempts = {"merge": 0}
 
         def interleave(version: int, entry: dict) -> None:

@@ -66,6 +66,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from reflex_spark.control import claim, write_atomic
+
 # Spark → Arrow mapping for the batch-transfer fast path; anything not
 # listed (timestamps, nested types) rides the tuple fallback.
 _ARROW_PRIMITIVES = {
@@ -151,10 +153,9 @@ class ReflexBlobWriter(DataSourceWriter):
       rblob/doc.go) keeps holding across producer runs. ``commit``
       merges the prior bucket contents into the ``_SUCCESS`` manifest
       instead of rewriting it to only the new write.
-    - **atomic commit**: ``_SUCCESS`` is published via temp +
-      ``os.replace`` (+fsync) — the manifest_log.py discipline — so a
-      crash mid-commit leaves either the previous manifest or the new
-      one, never a torn file.
+    - **atomic commit**: ``_SUCCESS`` is published with
+      ``control.write_atomic``, so a crash mid-commit leaves either the
+      previous manifest or the new one, never a torn file.
     - ``mode("overwrite")`` clears the bucket at PLANNING time (driver
       side, before any task runs) — the local-FS analogue of
       planning-time truncation. On a real object store this would be a
@@ -166,15 +167,10 @@ class ReflexBlobWriter(DataSourceWriter):
       driver-side from a listing, so two concurrent write jobs could
       pick the SAME seq and interleave partitions under one namespace
       (and the later manifest union would legitimize both). The
-      constructor therefore takes an exclusive CLAIM on the bucket
-      (``_writer.claim`` via O_EXCL — atomic on POSIX) held until
-      commit/abort; a second writer constructing while the claim is held
-      refuses loudly instead of corrupting the key order. A claim left
-      by a CRASHED driver keeps refusing (honest — the reference's
-      buckets are single-producer too, rblob/doc.go) until an operator
-      confirms no writer is live and removes it; the error names the
-      file, holder, and age. On a real object store this would be a
-      conditional-put (if-none-match) on the same key.
+      constructor therefore holds a ``control.claim`` on
+      ``_writer.claim`` until commit/abort: a second writer refuses
+      loudly instead of corrupting the key order (the reference's
+      buckets are single-producer too, rblob/doc.go).
 
     Doubles ride Python's shortest-round-trip repr, so a read-back is
     bit-exact."""
@@ -187,13 +183,17 @@ class ReflexBlobWriter(DataSourceWriter):
         import shutil
 
         os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
-        self._claim_path = os.path.join(self.root, "_writer.claim")
+        why = (
+            "the blob sink is single-writer — a concurrent append could pick "
+            "the same w-<seq> namespace and break the cursor-resume key order"
+        )
+        self._claim = claim(os.path.join(self.root, "_writer.claim"), why)
         # Claim BEFORE any overwrite clearing: an overwrite that rmtree'd
         # first would delete a LIVE writer's claim file and then "win" the
         # claim itself — two writers interleaving, exactly what the claim
         # exists to refuse. With the claim held, clearing keeps the claim
         # file and removes everything else.
-        self._acquire_claim()
+        self._claim.acquire()
         if overwrite:
             for name in os.listdir(self.root):
                 if name == "_writer.claim":
@@ -212,38 +212,6 @@ class ReflexBlobWriter(DataSourceWriter):
         # other writer can publish between this listing and our commit.
         self.prior = self._existing_blobs()
         self.seq = self._next_seq(self.prior)
-
-    def _acquire_claim(self) -> None:
-        import time
-
-        try:
-            fd = os.open(
-                self._claim_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-            )
-        except FileExistsError:
-            try:
-                age = max(0.0, time.time() - os.path.getmtime(self._claim_path))
-                with open(self._claim_path, encoding="utf-8") as f:
-                    holder = f.read().strip()
-            except OSError:
-                age, holder = -1.0, "?"
-            raise ValueError(
-                f"another writer holds this bucket's claim "
-                f"({self._claim_path}, holder {holder!r}, age {age:.0f}s): "
-                "the blob sink is single-writer — a concurrent append "
-                "could pick the same w-<seq> namespace and break the "
-                "cursor-resume key ordering. If that writer crashed, "
-                "remove the claim file after confirming no write job is "
-                "live."
-            ) from None
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(f"pid={os.getpid()}")
-
-    def _release_claim(self) -> None:
-        try:
-            os.remove(self._claim_path)
-        except OSError:
-            pass
 
     def _existing_blobs(self) -> list[str]:
         data = os.path.join(self.root, "data")
@@ -317,13 +285,10 @@ class ReflexBlobWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         new = [m.key for m in messages if m and m.key]
         manifest = sorted(set(self.prior) | set(new))
-        tmp = os.path.join(self.root, "._SUCCESS.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"blobs": manifest}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.root, "_SUCCESS"))
-        self._release_claim()
+        write_atomic(
+            os.path.join(self.root, "_SUCCESS"), json.dumps({"blobs": manifest})
+        )
+        self._claim.release()
 
     def abort(self, messages) -> None:
         # Remove blobs published by completed attempts, then sweep this
@@ -344,7 +309,7 @@ class ReflexBlobWriter(DataSourceWriter):
                 os.remove(tmp)
             except OSError:
                 pass
-        self._release_claim()
+        self._claim.release()
 
 
 # CSV string → typed value, matching Spark's PERMISSIVE-mode CSV reader

@@ -37,12 +37,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from reflex_spark.control import write_atomic
 from reflex_spark.sources.event_log import EVENT_SCHEMA, EventLog
 from reflex_spark.tables import empty_df
 
@@ -95,11 +95,8 @@ class ManifestEventLog(EventLog):
         entry = {"seq": seq, "dir": batch_dir, "min_id": base + 1, "max_id": base + n}
         mdir = self._manifest_dir
         os.makedirs(mdir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(entry, f)
         # the commit point: one atomic rename makes the whole batch visible
-        os.replace(tmp, os.path.join(mdir, f"{seq:08d}.json"))
+        write_atomic(os.path.join(mdir, f"{seq:08d}.json"), json.dumps(entry))
         return base + n
 
     def fill_noops(self, ids: list[int]) -> int:
@@ -154,13 +151,12 @@ class ManifestEventLog(EventLog):
         df.coalesce(int(target_partitions or 1)).write.mode("overwrite").parquet(new_dir)
         new_mdir = os.path.join(self.path, f"manifest-{gen}")
         os.makedirs(new_mdir, exist_ok=True)
-        with open(os.path.join(new_mdir, f"{0:08d}.json"), "w") as f:
-            json.dump({"seq": 0, "dir": new_dir, "min_id": 1, "max_id": head}, f)
+        write_atomic(
+            os.path.join(new_mdir, f"{0:08d}.json"),
+            json.dumps({"seq": 0, "dir": new_dir, "min_id": 1, "max_id": head}),
+        )
         # commit point: atomically repoint CURRENT at the new generation
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(f"manifest-{gen}")
-        os.replace(tmp, self._current_file)
+        write_atomic(self._current_file, f"manifest-{gen}")
         shutil.rmtree(old_mdir)
         # drop the now-unreferenced batch dirs; checkpointed streaming
         # readers have already processed them (their ledger is per-file)

@@ -9,11 +9,10 @@ the real thing, scoped to what the engine needs:
 - **Commit log**: ``<path>/_txlog/<version>.json``, one entry per commit,
   listing files added and removed (paths relative to ``<path>/data``).
   A reader's snapshot is ``adds - removes`` over entries ≤ its version.
-- **Atomic commits, optimistic concurrency**: a commit is the atomic
-  O_CREAT|O_EXCL creation of the next version's log file. Two writers
-  racing the same version: exactly one wins; the loser gets
-  ``ConcurrentCommitError`` and retries against the new snapshot. (POSIX
-  local-FS semantics; an object store would swap in a conditional-put.)
+- **Atomic commits, optimistic concurrency**: a commit is the exclusive
+  creation of the next version's log file (``control.create_exclusive``).
+  Two writers racing the same version: exactly one wins; the loser gets
+  ``ConcurrentCommitError`` and retries against the new snapshot.
 - **Snapshot isolation**: readers pin a version at open; concurrent
   commits never change what an open snapshot reads. Torn writes (data
   files without a log entry) are invisible by construction.
@@ -52,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from reflex_spark.control import create_exclusive, write_atomic
 from reflex_spark.operators.upsert import latest_by_key
 from reflex_spark.tables import empty_df
 
@@ -206,7 +206,7 @@ class TxTable:
         #: position-discovery scan — pruning telemetry for tests/ops.
         self.last_mor_scan: tuple[int, int] | None = None
         #: Test-only injection seam, called as (version, entry) right
-        #: before the O_EXCL commit attempt — chaos/race tests (and the
+        #: before the exclusive-create commit — chaos/race tests (and the
         #: judged writer-conflict query) hook the real commit protocol
         #: here instead of monkey-patching _commit by name (VERDICT r14
         #: Next #6). Never set in production paths.
@@ -239,15 +239,13 @@ class TxTable:
         if self._on_before_commit is not None:
             self._on_before_commit(version, entry)
         target = os.path.join(self.log_dir, f"{version:020d}.json")
+        entry = dict(entry, ts=time.time())  # commit wall time (AS OF)
         try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            create_exclusive(target, json.dumps(entry))
         except FileExistsError:
             raise ConcurrentCommitError(
                 f"version {version} was committed by another writer"
             ) from None
-        entry = dict(entry, ts=time.time())  # commit wall time (AS OF)
-        with os.fdopen(fd, "w") as f:
-            json.dump(entry, f)
         if version > 0 and version % self.CHECKPOINT_INTERVAL == 0:
             self._write_checkpoint(version)
 
@@ -264,7 +262,7 @@ class TxTable:
         """Materialize the full snapshot state at ``version`` so replay can
         start here. Best-effort and idempotent: the content for a given
         version is deterministic, so racing writers produce identical
-        files; temp+rename keeps readers from seeing a torn checkpoint."""
+        files, and ``write_atomic`` keeps readers from seeing a torn one."""
         files, schema, stats, dvs = self._snapshot_state(version)
         state = {
             "files": files,
@@ -273,10 +271,7 @@ class TxTable:
             "dvs": dvs,
         }
         target = os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
-        tmp = target + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, target)
+        write_atomic(target, json.dumps(state))
 
     def truncate_log(self) -> list[int]:
         """Drop commit-log entries at or below the latest checkpoint (the

@@ -122,7 +122,13 @@ def publish_changes_many(
     seed and merge windows back to back); a window that depends on a
     later commit must keep using ``publish_changes``. ``windows`` is
     ``(from_version, to_version, at)`` with the same explicit-timestamp
-    contract. Returns the final log head."""
+    contract. Returns the final log head.
+
+    Failure behaviour differs from the sequential calls: every window's
+    feed is prepared before any append, so if any window's preparation
+    fails, NO window is published (sequential calls would already have
+    published the windows before it). An at-least-once retry of the
+    whole call then publishes them all."""
     from concurrent.futures import ThreadPoolExecutor
 
     for _f, _t, at in windows:

@@ -33,30 +33,6 @@ from reflex_spark.streaming.cursors import CursorStore
 from reflex_spark.streaming.run import Spec, StreamOptions, run
 
 
-# --- batch window (P1) ----------------------------------------------------
-
-
-def batch_spec(
-    log,
-    cstore: CursorStore,
-    name: str,
-    consume_batch: Callable[[DataFrame, dict], None],
-    flush_len: int,
-    **opt_kwargs: Any,
-) -> Spec:
-    """Count-based batch windows (rpatterns/batch.go flushLen): the poll
-    loop's batch_limit is the flush size; each flush is one consume call
-    and the cursor advances only after the flush (ack-last semantics,
-    rpatterns/batch.go:216-241). Time-based flush (flushPeriod) maps to
-    trigger intervals on the run_stream path."""
-    return Spec(
-        log=log,
-        cstore=cstore,
-        consumer=Consumer(name=name, fn=consume_batch),
-        options=StreamOptions(batch_limit=flush_len, **opt_kwargs),
-    )
-
-
 # --- ack (P2) -------------------------------------------------------------
 
 

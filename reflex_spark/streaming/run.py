@@ -21,6 +21,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
+from reflex_spark.control import write_atomic
 from reflex_spark.sources.event_log import (
     NOOP_FOREIGN_ID,
     NOOP_TYPE,
@@ -284,8 +285,7 @@ def run_stream(
                 head = json.load(f)["head"]
         else:
             head = spec.log.head()
-            with open(head_file, "w") as f:
-                json.dump({"head": head}, f)
+            write_atomic(head_file, json.dumps({"head": head}))
         stream = stream.where(F.col("event_id") > head)
     if spec.options.drop_noops:
         stream = without_noops(stream)

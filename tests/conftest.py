@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -15,13 +16,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # was ~37 min of SYS time for a 26-min wall run (measured r17; tmpfs
 # writes are 4x faster and fsync-free). Tests only: bench.py and the
 # driver's query runs are untouched, so timed numbers stay comparable.
-# An externally-set TMPDIR always wins.
+# An externally-set TMPDIR always wins, and a tmpfs with less than
+# _SHM_MIN_FREE bytes free is passed over (it caps test scratch at its
+# size, so a nearly full one turns later tests into ENOSPC failures).
+# Either way the run gets its own scratch dir, removed at session end.
 _SHM = "/dev/shm"
-if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK) and "TMPDIR" not in os.environ:
-    _scratch = os.path.join(_SHM, "reflex_spark_tests")
-    os.makedirs(_scratch, exist_ok=True)
-    os.environ["TMPDIR"] = _scratch
-    tempfile.tempdir = None  # drop the cached pre-TMPDIR choice
+_SHM_MIN_FREE = 4 << 30
+_use_shm = (
+    "TMPDIR" not in os.environ
+    and os.path.isdir(_SHM)
+    and os.access(_SHM, os.W_OK)
+    and shutil.disk_usage(_SHM).free >= _SHM_MIN_FREE
+)
+_SCRATCH = tempfile.mkdtemp(
+    prefix="reflex_spark_tests_", dir=_SHM if _use_shm else None
+)
+os.environ["TMPDIR"] = _SCRATCH
+tempfile.tempdir = None  # drop the cached pre-TMPDIR choice
 
 from reflex_spark.session import get_spark
 
@@ -37,3 +48,12 @@ def spark():
         extra_conf={"spark.local.dir": tempfile.gettempdir()},
     )
     yield s
+    s.stop()
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _remove_scratch():
+    """Set up before ``spark`` and so torn down after it: the run's
+    scratch dir goes once Spark has stopped writing to it."""
+    yield
+    shutil.rmtree(_SCRATCH, ignore_errors=True)

@@ -1184,3 +1184,21 @@ def test_scaled_stream_shuffle_restores_conf(spark, monkeypatch):
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_rollup_counts_removes_its_temp_dir(spark):
+    """The judged poll-loop rollup materializes its result and then
+    removes its scratch dir: one leaked ``stream_rollup_*`` dir per call
+    before."""
+    import glob
+    import os
+    import tempfile
+
+    from reflex_spark.queries.streaming_judged import stream_rollup_counts
+    from tests.conftest import SF_SMALL
+
+    pattern = os.path.join(tempfile.gettempdir(), "stream_rollup_*")
+    before = set(glob.glob(pattern))
+    out = stream_rollup_counts(spark, SF_SMALL)
+    assert set(glob.glob(pattern)) == before
+    assert out.count() > 0  # readable after the cleanup
